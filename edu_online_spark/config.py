@@ -20,17 +20,24 @@ def _int_env(name: str, default: int) -> int:
 
 @dataclass(frozen=True)
 class EngineConfig:
-    """All knobs in one place; defaults target local[32] dev, but every
-    value is chosen to remain valid on a multi-executor cluster."""
+    """All knobs in one place. Defaults size the engine to the local
+    cores (local[$SPARK_GRAFT_CPUS], one shuffle partition per core),
+    and every value is chosen to remain valid on a multi-executor
+    cluster."""
 
     app_name: str = "edu-online-spark"
     # local[$SPARK_GRAFT_CPUS]; on a real cluster the master URL comes
     # from spark-submit and this is ignored.
     cpus: int = field(default_factory=lambda: _int_env("SPARK_GRAFT_CPUS", 32))
-    # One shuffle partition per core locally; at 100 TB you raise this to
-    # ~2-3x total cores (AQE coalesces the excess at runtime).
+    # One shuffle partition per core locally (0 = follow `cpus`); at
+    # 100 TB you raise this to ~2-3x total cores (AQE coalesces the
+    # excess at runtime). Streaming queries run without AQE and fix
+    # their state partitioning from this value at their first start, so
+    # every trigger of a stateful job pays one state-store task per
+    # partition. Spark restores a checkpoint's count from its offset
+    # log, so changing it never re-partitions existing state.
     shuffle_partitions: int = field(
-        default_factory=lambda: _int_env("SPARK_GRAFT_SHUFFLE_PARTITIONS", 32)
+        default_factory=lambda: _int_env("SPARK_GRAFT_SHUFFLE_PARTITIONS", 0)
     )
     # 128 MiB split target keeps scan tasks uniform at any scale factor.
     max_partition_bytes: str = "134217728"
@@ -54,6 +61,10 @@ class EngineConfig:
     # Fixed questions-per-knowledge-point denominator from the reference
     # (QzPointStreaming.scala:171).
     questions_per_point: int = 30
+
+    def __post_init__(self) -> None:
+        if self.shuffle_partitions <= 0:
+            object.__setattr__(self, "shuffle_partitions", self.cpus)
 
 
 DEFAULT = EngineConfig()

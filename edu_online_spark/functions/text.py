@@ -52,10 +52,11 @@ _SPREAD_DEFAULT_MAX_BYTES = 128 * 1024 * 1024
 # path probe the SAME file set (e.g. a shingle pass and a signature
 # pass over one documents scan), and each probe is driver-side work —
 # a JVM inputFiles() walk plus one getsize() syscall per file. The
-# total-size answer depends only on the file set, so memoize it
-# (bounded; parquet inputs are immutable within a session — the same
-# reason the driver's own file-listing cache is sound).
-_SPREAD_SIZE_CACHE: dict[tuple[str, ...], int | None] = {}
+# total-size answer depends only on the files, so memoize it (bounded),
+# keyed on each file's (path, mtime, size): a rewrite in place that
+# keeps the part-file names misses the cache instead of serving a stale
+# total.
+_SPREAD_SIZE_CACHE: dict[tuple[tuple[str, int, int], ...], int] = {}
 _SPREAD_SIZE_CACHE_MAX = 256
 
 
@@ -84,28 +85,23 @@ def spread_small_scan(df, *part_cols: str):
         return df
     import os
 
-    key = tuple(sorted(files))
-    if key in _SPREAD_SIZE_CACHE:
-        total = _SPREAD_SIZE_CACHE[key]
-        if total is None:  # remote/unstattable: previously passed through
+    stats = []
+    for f in files:
+        path = f[5:] if f.startswith("file:") else f
+        if not path.startswith("/"):
+            return df  # remote storage: splits are the cluster's job
+        try:
+            st = os.stat(path)
+        except OSError:
             return df
-    else:
-        total = 0
-        for f in files:
-            path = f[5:] if f.startswith("file:") else f
-            if not path.startswith("/"):
-                total = None  # remote storage: splits are the cluster's job
-                break
-            try:
-                total += os.path.getsize(path)
-            except OSError:
-                total = None
-                break
+        stats.append((path, st.st_mtime_ns, st.st_size))
+    key = tuple(sorted(stats))
+    total = _SPREAD_SIZE_CACHE.get(key)
+    if total is None:
+        total = sum(size for _, _, size in stats)
         if len(_SPREAD_SIZE_CACHE) >= _SPREAD_SIZE_CACHE_MAX:
             _SPREAD_SIZE_CACHE.clear()
         _SPREAD_SIZE_CACHE[key] = total
-        if total is None:
-            return df
     spark = df.sparkSession
     try:
         thr = int(

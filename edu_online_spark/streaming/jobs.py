@@ -1346,7 +1346,7 @@ def record_linkage_job(
 
     return (
         decoded.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(link))
+        .foreachBatch(link)
         .option("checkpointLocation", checkpoint)
         .trigger(**_trigger({}, available_now))
         .start()
@@ -1458,7 +1458,7 @@ def substring_scrub_job(
 
     return (
         docs.writeStream.outputMode("append")
-        .foreachBatch(sinks.pin_batch(scrub))
+        .foreachBatch(scrub)
         .option("checkpointLocation", checkpoint)
         .trigger(**_trigger({}, available_now))
         .start()

@@ -33,23 +33,21 @@ DEFAULT_UPSERT_BUCKETS = 64
 
 
 def pin_batch(write_fn):
-    """Persist the micro-batch for the duration of a foreachBatch body
-    (optimization r17, guide §5 reuse-vs-recompute — VERDICT r16 #6).
+    """Persist the micro-batch for the duration of a foreachBatch body.
 
-    For MULTI-PASS bodies only: the keyed-upsert merge runs four
-    actions on the batch (guard, touched-bucket collect, the anti-join
-    side, the union side), and the cumulative-snapshot jobs re-read it
-    against their standing state — each action on an UNPERSISTED
+    For MULTI-PASS bodies only. The keyed-upsert merge runs three
+    actions on the batch (the touched-bucket collect, the anti-join
+    side, the write), and the cumulative-snapshot jobs re-read it
+    against their standing state. Each action on an UNPERSISTED
     foreachBatch frame re-executes the trigger's whole plan, stateful
-    aggregation included. Measured per-trigger at 3k rows
-    (tools/stream_trigger_profile.py, committed before/after JSON):
-    register_totals 2991 → 2014 ms, quiz_mastery 3708 → 2540,
-    register_windowed 3841 → 1952. Single-pass bodies (isEmpty guard +
-    one write, e.g. parquet_append) are deliberately NOT wrapped: the
-    guard is a cheap take(1) while persist forces a full cached
-    materialization — measured a ~0.1-0.25 s/trigger REGRESSION on
-    page_flow/rawlog_archive, so pinning there costs, not saves.
-    Unpersist in finally so no blocks outlive the trigger."""
+    aggregation included.
+
+    Not for single-pass bodies (an isEmpty guard + one write, e.g.
+    parquet_append): the guard is a cheap take(1), while persist forces
+    a full cached materialization, so pinning there costs, not saves.
+    Nor for bodies whose first line localCheckpoints the batch: that
+    already materializes it once, and a pin around it would make two
+    copies. Unpersist in finally so no blocks outlive the trigger."""
 
     def pinned(batch: DataFrame, batch_id: int) -> None:
         batch.persist()
@@ -67,22 +65,33 @@ def parquet_upsert(path: str, key_cols: list[str], num_buckets: int = DEFAULT_UP
 
     Layout: parquet partitioned by `_bucket = pmod(xxhash64(keys), N)`
     — a pure function of the key, so a key lives in exactly one
-    partition directory forever. Merge per trigger:
+    partition directory forever. Merge per trigger, three Spark jobs:
 
       1. hash the batch keys → the set of AFFECTED buckets (collected
-         to the driver: ≤ N ints);
-      2. read ONLY those partition dirs (partition pruning on the
-         `_bucket` filter — untouched buckets are never opened);
-      3. anti-join old rows on the keys, union the batch (new wins);
-      4. write the merged buckets to a STAGING dir, hard-link every
+         to the driver: ≤ N ints). No buckets means an empty batch,
+         and nothing is written;
+      2. read ONLY the parquet files of those bucket dirs, listed on
+         the driver and read with the batch's own schema — no schema
+         inference job and no parallel listing job, and untouched
+         buckets are never opened. Anti-join the old rows on the keys
+         (the batch's keys are broadcast) and union the batch, so new
+         wins;
+      3. write the merged buckets to a STAGING dir, hard-link every
          untouched bucket dir in beside them (metadata-only, O(#files)
          not O(bytes)), then swap staging into place with two renames.
 
+    The write is clustered by `repartition("_bucket")` at the session's
+    shuffle-partition count (one per core by default). Hash
+    partitioning on `_bucket` sends every row of a bucket to the same
+    task, and a task writes one file per partition dir it holds, so
+    each touched bucket dir gets exactly one new file, whatever the
+    task count. Without the clustering, partitionBy emits one file per
+    (task × bucket), and the next trigger's merge re-reads them all.
+
     Replayed batches hit the same buckets with the same keys —
-    idempotent. The previous implementation read and rewrote the whole
-    sink every trigger (O(sink size) per batch); this one is
-    O(batch + touched buckets), which is what survives a sink that has
-    accumulated months of keys.
+    idempotent. Per-trigger cost is O(batch + touched buckets), not
+    O(sink size), which is what survives a sink that has accumulated
+    months of keys.
 
     Why the staged swap instead of dynamic partition overwrite:
     overwrite deletes and rewrites live bucket dirs in place, so a
@@ -98,52 +107,76 @@ def parquet_upsert(path: str, key_cols: list[str], num_buckets: int = DEFAULT_UP
     """
 
     def write(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
         keyed = batch.dropDuplicates(key_cols).withColumn(
             "_bucket",
             F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(num_buckets)).cast(
                 "int"
             ),
         )
+        buckets = [r[0] for r in keyed.select("_bucket").distinct().collect()]
+        if not buckets:
+            return
         staging = path + ".__staging__"
         retired = path + ".__retired__"
         _recover_half_commit(path, staging, retired)
-        if os.path.exists(path):
-            buckets = [r[0] for r in keyed.select("_bucket").distinct().collect()]
-            old = spark.read.parquet(path).filter(F.col("_bucket").isin(buckets))
+        if not os.path.exists(path):
+            _write_buckets(keyed, staging)
+            os.rename(staging, path)
+            return
+        touched = {f"_bucket={b}" for b in buckets}
+        files = [
+            os.path.join(path, d, f)
+            for d in sorted(touched)
+            if os.path.isdir(os.path.join(path, d))
+            for f in sorted(os.listdir(os.path.join(path, d)))
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        ]
+        merged = keyed
+        if files:
+            old = _read_files(batch.sparkSession, files, keyed.schema, path)
             merged = old.join(
                 keyed.select(*key_cols), key_cols, "left_anti"
             ).unionByName(keyed)
-            # cluster by bucket before writing: partitionBy alone emits
-            # one file per (task × bucket) — up to shuffle.partitions ×
-            # num_buckets tiny files per trigger, which the NEXT
-            # trigger's merge then re-reads (measured: the file churn,
-            # not the merge, dominated per-trigger cost ~8×). One
-            # bucket-hashed shuffle of the touched rows → ~1 file per
-            # bucket dir, steady-state.
-            # reads the live dir, writes the staging dir — no overlap
-            merged.repartition(num_buckets, "_bucket").write.mode(
-                "overwrite"
-            ).partitionBy("_bucket").parquet(staging)
-            touched = {f"_bucket={b}" for b in buckets}
-            for entry in os.listdir(path):
-                src = os.path.join(path, entry)
-                if (
-                    entry.startswith("_bucket=")
-                    and entry not in touched
-                    and os.path.isdir(src)
-                ):
-                    _link_tree(src, os.path.join(staging, entry))
-            _swap_into_place(path, staging, retired)
-        else:
-            keyed.repartition(num_buckets, "_bucket").write.mode(
-                "overwrite"
-            ).partitionBy("_bucket").parquet(staging)
-            os.rename(staging, path)
+        # reads the live dir, writes the staging dir — no overlap
+        _write_buckets(merged, staging)
+        for entry in os.listdir(path):
+            src = os.path.join(path, entry)
+            if (
+                entry.startswith("_bucket=")
+                and entry not in touched
+                and os.path.isdir(src)
+            ):
+                _link_tree(src, os.path.join(staging, entry))
+        _swap_into_place(path, staging, retired)
 
     return pin_batch(write)
+
+
+def _write_buckets(df: DataFrame, staging: str) -> None:
+    """One file per bucket dir: see parquet_upsert."""
+    df.repartition("_bucket").write.mode("overwrite").partitionBy("_bucket").parquet(
+        staging
+    )
+
+
+_LISTING_THRESHOLD_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _read_files(spark, files: list[str], schema, base: str) -> DataFrame:
+    """Read known parquet files with a known schema and no Spark job.
+
+    Past the listing threshold (32 paths by default) Spark lists input
+    paths with a distributed job, one task per path, even when every
+    path is a file it only has to stat. The files were just listed
+    here, so raise the threshold for the one read; the file index is
+    built while the reader resolves, so the old value is back before
+    any later read."""
+    before = spark.conf.get(_LISTING_THRESHOLD_CONF)
+    spark.conf.set(_LISTING_THRESHOLD_CONF, str(max(len(files), int(before))))
+    try:
+        return spark.read.schema(schema).option("basePath", base).parquet(*files)
+    finally:
+        spark.conf.set(_LISTING_THRESHOLD_CONF, before)
 
 
 def _recover_half_commit(path: str, staging: str, retired: str) -> None:

@@ -395,3 +395,150 @@ def test_every_cumulative_sink_recovers_before_existence_check():
             f"by a nearby {recover} — cumulative sink would lose state "
             "on a half-committed swap"
         )
+
+
+def _parquet_files_per_bucket(path: str) -> dict[str, int]:
+    return {
+        d: len([f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")])
+        for d in os.listdir(path)
+        if d.startswith("_bucket=")
+    }
+
+
+def _rows(spark, path: str) -> dict:
+    return {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
+
+
+def test_parquet_upsert_keeps_one_file_per_bucket(spark, tmp_path):
+    """The merge write is clustered by hash of _bucket, so each touched
+    bucket dir is rewritten as exactly one file, trigger after trigger,
+    whatever the session's task count."""
+    out = str(tmp_path / "sink")
+    sink = sinks.parquet_upsert(out, ["k"], num_buckets=8)
+    expected = {}
+    for t in range(4):
+        rows = [(f"key{i}", 100 * t + i) for i in range(10 * t, 10 * t + 25)]
+        sink(spark.createDataFrame(rows, ["k", "v"]), t)
+        expected.update(rows)
+        assert set(_parquet_files_per_bucket(out).values()) == {1}
+    assert len(_parquet_files_per_bucket(out)) == 8
+    assert _rows(spark, out) == expected
+
+
+def test_parquet_upsert_empty_batch_writes_nothing(spark, tmp_path):
+    out = str(tmp_path / "sink")
+    sink = sinks.parquet_upsert(out, ["k"], num_buckets=4)
+    empty = spark.createDataFrame([], "k string, v long")
+    sink(empty, 0)
+    assert os.listdir(tmp_path) == []
+    sink(spark.createDataFrame([("a", 1), ("b", 2)], ["k", "v"]), 1)
+    before = _bucket_files(out)
+    sink(empty, 2)
+    assert _bucket_files(out) == before
+    assert set(os.listdir(tmp_path)) == {"sink"}
+
+
+def _keys_by_bucket(spark, num_buckets: int, n: int = 200) -> dict[int, list[str]]:
+    """Candidate keys grouped by the bucket the sink hashes them into."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(f"key{i}",) for i in range(n)], ["k"]).withColumn(
+        "b", F.pmod(F.xxhash64("k"), F.lit(num_buckets)).cast("int")
+    )
+    out: dict[int, list[str]] = {}
+    for r in df.collect():
+        out.setdefault(r["b"], []).append(r["k"])
+    return out
+
+
+def test_parquet_upsert_into_buckets_with_no_dir_yet(spark, tmp_path):
+    """On an existing sink, a batch touching buckets that have no dir
+    yet reads only the touched dirs that exist and merges correctly,
+    whether or not any touched dir exists."""
+    out = str(tmp_path / "sink")
+    sink = sinks.parquet_upsert(out, ["k"], num_buckets=16)
+    by_bucket = _keys_by_bucket(spark, 16)
+    b0, b1, b2, b3 = sorted(by_bucket)[:4]
+    sink(spark.createDataFrame([(by_bucket[b0][0], 1)], ["k", "v"]), 0)
+    assert set(_parquet_files_per_bucket(out)) == {f"_bucket={b0}"}
+
+    # only new buckets: no existing dir is touched
+    fresh = [(by_bucket[b1][0], 2), (by_bucket[b2][0], 3)]
+    sink(spark.createDataFrame(fresh, ["k", "v"]), 1)
+    # an existing bucket and a new one together
+    mixed = [(by_bucket[b0][0], 10), (by_bucket[b0][1], 11), (by_bucket[b3][0], 4)]
+    sink(spark.createDataFrame(mixed, ["k", "v"]), 2)
+
+    assert _rows(spark, out) == {
+        by_bucket[b0][0]: 10,
+        by_bucket[b0][1]: 11,
+        by_bucket[b1][0]: 2,
+        by_bucket[b2][0]: 3,
+        by_bucket[b3][0]: 4,
+    }
+    assert _parquet_files_per_bucket(out) == {f"_bucket={b}": 1 for b in (b0, b1, b2, b3)}
+    assert set(os.listdir(tmp_path)) == {"sink"}
+
+
+def test_parquet_upsert_continues_an_older_sink(spark, tmp_path):
+    """A sink written by the previous merge, which clustered the write
+    with repartition(num_buckets, "_bucket"), is upserted in place: the
+    on-disk layout is the same, and buckets holding several files (a
+    sink written without clustering) are merged back to one file."""
+    from pyspark.sql import functions as F
+
+    out = str(tmp_path / "sink")
+    old = spark.createDataFrame([(f"key{i}", i) for i in range(40)], ["k", "v"])
+    old = old.withColumn("_bucket", F.pmod(F.xxhash64("k"), F.lit(64)).cast("int"))
+    old.repartition(64, "_bucket").write.mode("overwrite").partitionBy("_bucket").parquet(out)
+    # a second, unclustered file in every bucket that holds key0..key9
+    spark.createDataFrame(
+        [(f"key{i}", 1000 + i) for i in range(40, 50)], ["k", "v"]
+    ).withColumn("_bucket", F.pmod(F.xxhash64("k"), F.lit(64)).cast("int")).write.mode(
+        "append"
+    ).partitionBy("_bucket").parquet(out)
+
+    sink = sinks.parquet_upsert(out, ["k"])
+    batch = [(f"key{i}", -i) for i in range(0, 50, 5)]
+    sink(spark.createDataFrame(batch, ["k", "v"]), 0)
+
+    expected = {f"key{i}": i for i in range(40)}
+    expected.update({f"key{i}": 1000 + i for i in range(40, 50)})
+    expected.update(batch)
+    assert _rows(spark, out) == expected
+    touched = {
+        f"_bucket={r['b']}"
+        for r in spark.createDataFrame(batch, ["k", "v"])
+        .select(F.pmod(F.xxhash64("k"), F.lit(64)).cast("int").alias("b"))
+        .collect()
+    }
+    files = _parquet_files_per_bucket(out)
+    assert all(files[d] == 1 for d in touched)
+
+
+def test_parquet_upsert_merge_runs_three_jobs(spark, tmp_path):
+    """A steady merge is three Spark jobs: the touched-bucket collect,
+    the broadcast of the batch keys and the write. No schema-inference
+    job, and no parallel listing job even when more buckets are touched
+    than Spark's listing threshold (32 paths). Counted with AQE off, as
+    in a streaming query's foreachBatch, where AQE does not run."""
+    out = str(tmp_path / "sink")
+    sink = sinks.parquet_upsert(out, ["k"])
+    rows = [(f"key{i}", i) for i in range(400)]
+    sink(spark.createDataFrame(rows, ["k", "v"]), 0)
+    assert len(_parquet_files_per_bucket(out)) == 64
+
+    update = spark.createDataFrame([(k, -v) for k, v in rows], ["k", "v"])
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup("upsert-merge", "steady merge")
+    try:
+        sink(update, 1)
+        jobs_run = sc.statusTracker().getJobIdsForGroup("upsert-merge")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(jobs_run) == 3
+    assert _rows(spark, out) == {k: -v for k, v in rows}

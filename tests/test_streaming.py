@@ -1817,3 +1817,89 @@ def test_compaction_recovery_steals_stale_lock(spark, tmp_path, monkeypatch):
     assert jobs._recover_compaction(idx) == 0  # nothing left to fold
     assert not os.path.exists(os.path.join(idx, "_compaction_manifest.json"))
     assert not os.path.exists(os.path.join(idx, "_compaction_commit.lock"))
+
+
+def test_stateful_jobs_resume_under_a_different_shuffle_partition_count(
+    spark, tmp_path
+):
+    """A query fixes its state partitioning from spark.sql.shuffle.partitions
+    at its first start, and Spark restores that count from the offset log
+    on every restart. So changing the engine default (one partition
+    per core) needs no checkpoint migration: a checkpoint started under
+    3 partitions resumes under 5, keeps its 3 state partitions, and the
+    sinks still equal a recomputation over every input file."""
+    from pyspark.sql import functions as F
+
+    from edu_online_spark.sources.logs import decode_qz_log, decode_register_log
+
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    reg_src, qz_src = str(tmp_path / "reg"), str(tmp_path / "qz")
+
+    def reg_lines(wave: int) -> list[str]:
+        return [
+            f"u{wave}-{i}\t{1 + i % 3 if i % 5 else 9}\t2026-08-13 10:0{wave}:{i % 60:02d}"
+            for i in range(40)
+        ]
+
+    def qz_lines(wave: int) -> list[str]:
+        return [
+            f"{i % 7}\t{5 + i % 2}\t{i % 4}\tq{(i * wave) % 9}\t{(i + wave) % 2}"
+            f"\t2026-08-13 1{wave}:00:{i % 60:02d}"
+            for i in range(60)
+        ]
+
+    def run_both() -> None:
+        for fn, src in ((jobs.register_totals_job, reg_src), (jobs.quiz_mastery_job, qz_src)):
+            name = fn.__name__
+            _run(fn, spark, src, str(tmp_path / f"{name}.out"), str(tmp_path / f"{name}.ck"))
+
+    try:
+        spark.conf.set(conf, "3")
+        _write_lines(reg_src, "b1.txt", reg_lines(1))
+        _write_lines(qz_src, "b1.txt", qz_lines(1))
+        run_both()
+        spark.conf.set(conf, "5")
+        _write_lines(reg_src, "b2.txt", reg_lines(2))
+        _write_lines(qz_src, "b2.txt", qz_lines(2))
+        run_both()
+    finally:
+        spark.conf.set(conf, before)
+
+    for name in ("register_totals_job", "quiz_mastery_job"):
+        state = tmp_path / f"{name}.ck" / "state" / "0"
+        assert sorted(os.listdir(state)) == ["0", "1", "2", "_metadata"]
+
+    totals = {
+        r["platform"]: r["total"]
+        for r in spark.read.parquet(str(tmp_path / "register_totals_job.out")).collect()
+    }
+    expected_totals = {
+        r["platform"]: r["count"]
+        for r in decode_register_log(spark.read.text(reg_src))
+        .groupBy("platform")
+        .count()
+        .collect()
+    }
+    assert totals == expected_totals and sum(totals.values()) == 80
+
+    cols = ["uid", "courseid", "pointid", "qz_sum", "qz_istrue", "questionids", "createtime"]
+    mastery = sorted(
+        tuple(r[c] for c in cols)
+        for r in spark.read.parquet(str(tmp_path / "quiz_mastery_job.out")).collect()
+    )
+    expected_mastery = sorted(
+        tuple(r[c] for c in cols)
+        for r in decode_qz_log(spark.read.text(qz_src))
+        .groupBy("uid", "courseid", "pointid")
+        .agg(
+            F.count("*").alias("qz_sum"),
+            F.sum(F.when(F.col("istrue") == "1", 1).otherwise(0)).alias("qz_istrue"),
+            F.array_join(F.array_sort(F.collect_set("questionid")), ",").alias(
+                "questionids"
+            ),
+            F.min("createtime").alias("createtime"),
+        )
+        .collect()
+    )
+    assert mastery == expected_mastery and sum(m[3] for m in mastery) == 120

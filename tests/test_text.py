@@ -114,3 +114,45 @@ def test_spread_small_scan_passthrough_above_threshold(spark, tmp_path):
             spark.conf.unset(SPREAD_MAX_INPUT_BYTES_CONF)
         except Exception:
             pass
+
+
+def test_spread_small_scan_cache_misses_on_in_place_rewrite(spark, tmp_path):
+    """The size memo is keyed on each file's mtime and size as well as
+    its path: rewriting a file in place under the same name must not
+    serve the old total."""
+    import os
+    import shutil
+
+    from edu_online_spark.functions.text import (
+        SPREAD_MAX_INPUT_BYTES_CONF,
+        _SPREAD_SIZE_CACHE,
+        spread_small_scan,
+    )
+
+    p = str(tmp_path / "docs.parquet")
+    spark.createDataFrame([(1, "tiny")], ["doc_id", "text"]).coalesce(1).write.parquet(p)
+    (part,) = [f for f in os.listdir(p) if f.endswith(".parquet")]
+    small = os.path.getsize(os.path.join(p, part))
+    _SPREAD_SIZE_CACHE.clear()
+    spark.conf.set(SPREAD_MAX_INPUT_BYTES_CONF, str(small + 1))
+    try:
+        plan = lambda df: df._jdf.queryExecution().logical().toString()  # noqa: E731
+        assert "RepartitionByExpression" in plan(
+            spread_small_scan(spark.read.parquet(p), "doc_id")
+        )
+        # same part-file name, now far above the threshold
+        big = str(tmp_path / "big.parquet")
+        spark.createDataFrame(
+            [(i, "text " * 50) for i in range(500)], ["doc_id", "text"]
+        ).coalesce(1).write.parquet(big)
+        (big_part,) = [f for f in os.listdir(big) if f.endswith(".parquet")]
+        os.remove(os.path.join(p, part))
+        os.remove(os.path.join(p, f".{part}.crc"))
+        shutil.copy(os.path.join(big, big_part), os.path.join(p, part))
+        assert os.path.getsize(os.path.join(p, part)) > small + 1
+        assert "RepartitionByExpression" not in plan(
+            spread_small_scan(spark.read.parquet(p), "doc_id")
+        )
+        assert len(_SPREAD_SIZE_CACHE) == 2
+    finally:
+        spark.conf.unset(SPREAD_MAX_INPUT_BYTES_CONF)
